@@ -5,11 +5,17 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{CosineSimilarity, DotProduct, MinKDistinctLongs, MinKStrings, TopKByScore}
 
-/** SparkSessionExtensions entry point: installs the engine's custom
-  * Catalyst expressions as SQL functions at session build time —
-  * the idiomatic deployment path for a cluster
-  * (`spark.sql.extensions=graft.GraftExtensions`) as opposed to the
-  * per-session VectorExprs.register call.
+/** SparkSessionExtensions entry point and the engine's only install
+  * path for its Catalyst extensions, applied at session build time:
+  * - the as-of join's planner strategy (`AsOfJoinStrategy`) and its
+  *   two optimizer rules (`PruneAsOfJoinColumns`,
+  *   `PushLeftFilterThroughAsOfJoin`);
+  * - the `RANGE_BIN` band-join hint rule (`BinRangeJoinHint`);
+  * - the `asof_join` table-valued function;
+  * - the SQL functions `cosine_sim`, `dot_product`, `topk_by_score`,
+  *   `min_k_strings` and `min_k_distinct_longs`.
+  *
+  * `GraftSession.build` installs it and refuses a session without it.
   *
   * Usage:
   *   SparkSession.builder().withExtensions(new GraftExtensions) …

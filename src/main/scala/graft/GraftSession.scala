@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** Canonical session factory for the engine's entry points and tests.
   *
@@ -9,58 +10,41 @@ import org.apache.spark.sql.SparkSession
   *   instead of erroring (SURVEY.md §2.2 P6, §2.9). Spark 4 defaults
   *   ANSI on, which would turn those data-quality paths into runtime
   *   failures.
-  * - `shuffle.partitions` sized to the local core count, not 200 —
-  *   on a real cluster this is AQE-coalesced anyway. Overridable via
-  *   `SPARK_GRAFT_SHUFFLE_PARTITIONS` (a cluster deployment sets it to
-  *   cores×2-3 across the fleet; AQE coalescing sizes the actual
-  *   post-shuffle partitions to data, below).
-  * - AQE on: runtime re-planning (skew joins, partition coalescing)
-  *   is part of the 100 TB story.
-  * - `coalescePartitions.minPartitionSize` raised from Spark's 1m
-  *   default (env `SPARK_GRAFT_MIN_PARTITION_BYTES`): AQE's coalesced
-  *   partition target is max(min(shuffleBytes/parallelism, advisory),
-  *   minPartitionSize), so the 1m floor schedules one reduce task per
-  *   MB of shuffle — at small inputs that is pure per-task latency
-  *   (measured: the full sf0.1 sweep ran FASTER on local[8] than
-  *   local[32] because every stage launched 32 sub-MB tasks). 16m
-  *   makes the post-shuffle partition count a function of DATA SIZE
-  *   (ceil(bytes/16m), capped by parallelism): a shuffle under 16 MB
-  *   is one task at any core count, while any shuffle big enough to
-  *   use the machine still fans out to shuffleBytes/16m ≤ cores tasks.
-  *   Scale story unchanged: at cluster inputs shuffleBytes/parallelism
-  *   far exceeds both floors, so this only trims the degenerate
-  *   small-shuffle tail (guide: partitions should be ~100 MB-1 GB,
-  *   never single-digit MB).
-  * - `advisoryPartitionSizeInBytes` stays at Spark's 64m default but
-  *   is parameterised (`SPARK_GRAFT_ADVISORY_BYTES`) — the knob a
-  *   cluster deployment raises to 256m for multi-TB shuffles.
-  * - GraftExtensions installed at build time — the cluster deployment
-  *   path (`spark.sql.extensions=graft.GraftExtensions`): custom SQL
-  *   functions, the as-of TVF/strategy/rules, and the RANGE_BIN hint
-  *   rule are live in every session (and every `newSession()` child)
-  *   with zero per-session registration. Note getOrCreate reuses an
-  *   existing session and IGNORES withExtensions — in-process callers
-  *   after a foreign builder won't get the analyzer hint rule (the
-  *   runtime-registration paths in AsOfJoinOps/VectorExprs still
-  *   cover the rest).
+  * - `shuffle.partitions` equals the local core count, not 200.
+  * - AQE on: runtime re-planning (skew joins, partition coalescing).
+  *   Its partition sizes stay at Spark's defaults (64m advisory, 1m
+  *   coalescing minimum); OPTIMIZATION_r20.md measured a 16m minimum
+  *   as slower.
+  * - GraftExtensions installed at build time: custom SQL functions,
+  *   the as-of TVF/strategy/rules and the RANGE_BIN hint rule are live
+  *   in every session (and every `newSession()` child). This is the
+  *   only install path. `getOrCreate` reuses an existing session and
+  *   ignores `withExtensions`, so building on top of a session that
+  *   lacks them throws instead of returning a half-equipped session.
   */
 object GraftSession {
   def build(appName: String, cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
+    // a session the builder creates below always carries the
+    // extensions, so only a reused one is checked: the check builds the
+    // session state, CPU a fresh start would otherwise spend in its
+    // first query
+    val reused = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).isDefined
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_BYTES", "1m"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_BYTES", "64m"))
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
+    if (reused && !spark.sessionState.functionRegistry.functionExists(FunctionIdentifier("cosine_sim")))
+      throw new IllegalStateException(
+        s"GraftSession.build('$appName') reused a running session without " +
+          "graft.GraftExtensions (getOrCreate ignores withExtensions once a " +
+          "session exists): stop that session first, or build it with " +
+          "spark.sql.extensions=graft.GraftExtensions")
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -786,7 +786,6 @@ object StatOps {
     * than only in SqlSurfaceSpec.
     */
   def asofJoinSql(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.AsOfJoinOps.registerSqlSurface(spark)
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         TimeSeriesOps.epochSecExpr("ts").as("es"))

@@ -12,29 +12,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   * name-based analyzer resolution, and duplicate names across sides
   * are the caller's choice to keep or rename.
   *
-  * The planner strategy is registered through BOTH deployment paths:
-  * `GraftExtensions` (cluster: `spark.sql.extensions`) and, here,
-  * idempotently via `spark.experimental.extraStrategies` so any
-  * session that reaches this API plans the node without extra setup.
+  * The planner strategy, the optimizer rules and the `asof_join` TVF
+  * are installed by `GraftExtensions` when the session is built
+  * (`GraftSession.build`, or `spark.sql.extensions` on a cluster).
   */
 object AsOfJoinOps {
-
-  // the check-then-append below is not atomic; without the lock two
-  // threads planning their first as-of join on one session could
-  // double-register (harmless results, but every rule would run twice
-  // per batch). Registration is rare and cheap, so one global lock —
-  // not per-session — keeps it simple.
-  private def ensureRegistered(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    if (!spark.experimental.extraOptimizations.contains(PruneAsOfJoinColumns))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PruneAsOfJoinColumns
-    if (!spark.experimental.extraOptimizations.contains(PushLeftFilterThroughAsOfJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushLeftFilterThroughAsOfJoin
-  }
 
   /** `tolerance`: maximum allowed |leftTime − matchTime| gap, pandas
     * merge_asof-style — a neighbor farther than the bound yields
@@ -91,7 +73,6 @@ object AsOfJoinOps {
            direction: AsOfDirection = AsOfDirection.Backward,
            hint: AsOfHint = AsOfHint.Auto): DataFrame = {
     val spark = left.sparkSession
-    ensureRegistered(spark)
     // computed Columns (e.g. -df("t")) arrive from the Spark 4
     // column-node API as UnresolvedFunction stubs that no analyzer
     // rule will visit inside a custom node — reject them with a
@@ -208,9 +189,8 @@ object AsOfJoinOps {
     * all work, and the TVF inherits the Scala API's whole contract
     * (null-key SQL semantics, self-as-of dedup, pruning rules).
     *
-    * Deployment: `spark.sql.extensions=graft.GraftExtensions`
-    * registers it at session build; [[registerSqlSurface]] installs it
-    * into an already-running session.
+    * Deployment: `GraftExtensions` registers it at session build
+    * (`spark.sql.extensions=graft.GraftExtensions` on a cluster).
     */
   private[graft] def buildFromSql(exprs: Seq[Expression]): LogicalPlan = {
     val usage = "asof_join('left', 'right', 'key[:rkey][,key2…]', " +
@@ -277,8 +257,7 @@ object AsOfJoinOps {
     // scope; resolving through spark.table + the Scala constructor
     // (instead of hand-building UnresolvedRelation/Attribute trees)
     // reuses the hardened path — self-as-of dedup, computed-column
-    // rejection, strategy registration — and hands the analyzer an
-    // already-resolved subtree.
+    // rejection — and hands the analyzer an already-resolved subtree.
     val spark = SparkSession.active
     val l = spark.table(str(0, "left table"))
     val r = spark.table(str(1, "right table"))
@@ -312,14 +291,5 @@ object AsOfJoinOps {
           hint.getOrElse(AsOfHint.Auto))
     }
     out.queryExecution.analyzed
-  }
-
-  /** Install the `asof_join` table-valued function into a running
-    * session (the runtime twin of GraftExtensions' injectTableFunction
-    * — for sessions not built with `spark.sql.extensions`).
-    */
-  def registerSqlSurface(spark: SparkSession): Unit = {
-    ensureRegistered(spark)
-    Bridge.registerTableFunction(spark, "asof_join", buildFromSql)
   }
 }

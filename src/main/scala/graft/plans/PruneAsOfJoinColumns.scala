@@ -16,9 +16,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * keeping the join keys and time columns the node itself consumes);
   * FileSourceStrategy then folds the narrow Project into the scan's
   * ReadSchema. Guarded to fire only when it actually narrows, so the
-  * fixed-point batch terminates. Registered beside the strategy in
-  * both deployment paths (GraftExtensions /
-  * spark.experimental.extraOptimizations via AsOfJoinOps).
+  * fixed-point batch terminates. Installed beside the strategy by
+  * GraftExtensions.
   */
 object PruneAsOfJoinColumns extends Rule[LogicalPlan] {
 

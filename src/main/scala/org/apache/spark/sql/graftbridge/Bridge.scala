@@ -8,18 +8,13 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * expose custom Catalyst expressions as user-facing Columns — the
   * standard extension-library technique (a sub-package of
   * org.apache.spark.sql sees `private[sql]` members). Nothing here
-  * does work; it only re-exports two converters and the function
-  * registry hook.
+  * does work; it only re-exports what the plans use. SQL functions
+  * and the `asof_join` TVF are installed by `graft.GraftExtensions`.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  def registerFunction(spark: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 
   /** Nullability-insensitive type equality (DataType.sameType is
     * private[sql] in Spark 4) — the comparison Spark's own join
@@ -28,16 +23,6 @@ object Bridge {
   def sameType(a: org.apache.spark.sql.types.DataType,
                b: org.apache.spark.sql.types.DataType): Boolean =
     a.sameType(b)
-
-  /** Register a table-valued function (args → LogicalPlan) — the
-    * runtime twin of SparkSessionExtensions.injectTableFunction.
-    */
-  def registerTableFunction(
-      spark: SparkSession, name: String,
-      builder: Seq[Expression] =>
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit =
-    spark.sessionState.tableFunctionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 
   /** Wrap a custom logical plan as a user-facing DataFrame (the
     * `Dataset.ofRows` hook every whole-operator extension needs).

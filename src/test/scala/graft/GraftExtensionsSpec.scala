@@ -71,4 +71,26 @@ class GraftExtensionsSpec extends AnyFunSuite {
       SparkSession.clearDefaultSession()
     }
   }
+
+  test("GraftSession.build refuses a running session without GraftExtensions") {
+    // getOrCreate hands back the running session and ignores
+    // withExtensions; build must say so rather than return a session
+    // whose SQL functions, as-of TVF and rules are missing
+    SparkSession.getActiveSession.foreach(_.stop())
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val bare = SparkSession.builder()
+      .master("local[2]")
+      .appName("bare-session-spec")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    try {
+      val e = intercept[IllegalStateException](GraftSession.build("after-bare", "2"))
+      assert(e.getMessage.contains("GraftExtensions"), e.getMessage)
+    } finally {
+      bare.stop()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
+  }
 }

@@ -291,7 +291,6 @@ class SqlSurfaceSpec extends AnyFunSuite {
     // AsOfJoin node the Scala API builds — asserted by plan and by
     // value against asof_nat / asof_tol on real data.
     val sf = "/root/testdata/sf0.01"
-    graft.plans.AsOfJoinOps.registerSqlSurface(spark)
     val ev = graft.sources.Tables.events(spark, sf)
       .select(col("user_id"), col("event_id"), col("event_type"),
         graft.operators.TimeSeriesOps.epochSecExpr("ts").as("es"))

@@ -254,7 +254,6 @@ class AsOfJoinSpec extends AnyFunSuite {
       raw.orderBy("lpay").collect().map(_.toString).toSeq)
     // the SQL TVF resolves CATALOG tables, so the bucketed layout's
     // zero-Exchange plan is reachable from pure SQL too
-    AsOfJoinOps.registerSqlSurface(spark)
     val sql = spark.sql(
       "SELECT * FROM asof_join('asof_bkt_l', 'asof_bkt_r', 'k:rk', 'lt', 'rt', 'merge')")
     val sqlPlan = sql.queryExecution.executedPlan.toString()
@@ -304,7 +303,6 @@ class AsOfJoinSpec extends AnyFunSuite {
       .map(x => x.getString(0) -> x.getString(1)).toMap
     assert(out2 === Map("x" -> "eu1", "y" -> "us1", "z" -> "eu2"))
     // and the same composite spec through the SQL TVF ('a,b' key list)
-    AsOfJoinOps.registerSqlSurface(spark)
     l2.createOrReplaceTempView("asof_ck_l")
     r2.createOrReplaceTempView("asof_ck_r")
     val sql = spark.sql(
@@ -393,7 +391,6 @@ class AsOfJoinSpec extends AnyFunSuite {
     assert(selfBc === Map(100L -> -1L, 101L -> 100L, 200L -> -1L),
       s"broadcast self-as-of diverged: $selfBc")
     // and from SQL: the trailing 'broadcast' option plans the same form
-    AsOfJoinOps.registerSqlSurface(spark)
     left.createOrReplaceTempView("asof_bc_l")
     right.createOrReplaceTempView("asof_bc_r")
     val sql = spark.sql(
@@ -491,7 +488,6 @@ class AsOfJoinSpec extends AnyFunSuite {
       .toMap
     assert(viaNeg === wantFwd, "negation twin disagrees with native forward")
     // nearest through the SQL TVF, and option conflicts fail fast
-    AsOfJoinOps.registerSqlSurface(spark)
     left.createOrReplaceTempView("asof_dir_l")
     right.createOrReplaceTempView("asof_dir_r")
     val sqlNear = spark.sql(
@@ -566,7 +562,6 @@ class AsOfJoinSpec extends AnyFunSuite {
     assert(toMapOf(nearSalt) === toMapOf(nearPlain),
       "salted nearest diverged from plain nearest")
     // and from SQL: the 'salt:N' trailing option takes the same path
-    AsOfJoinOps.registerSqlSurface(s)
     left.createOrReplaceTempView("asof_salt_l")
     right.createOrReplaceTempView("asof_salt_r")
     val sqlSalt = s.sql(
@@ -635,7 +630,6 @@ class AsOfJoinSpec extends AnyFunSuite {
     }
     assert(e1.getMessage.contains("mismatched types"), e1.getMessage)
     // TVF: a trailing colon is a mistyped right key, not a same-named one
-    AsOfJoinOps.registerSqlSurface(spark)
     Seq((1L, 10L, "a")).toDF("k", "lt", "lid").createOrReplaceTempView("g_l")
     Seq((1L, 5L, "r")).toDF("rk", "rt", "tag").createOrReplaceTempView("g_r")
     val e2 = intercept[Exception] {
@@ -648,6 +642,29 @@ class AsOfJoinSpec extends AnyFunSuite {
         .collect()
     }
     assert(e3.getMessage.contains("twice"), e3.getMessage)
+  }
+
+  test("the strategy and rules are installed once, by GraftExtensions only") {
+    import spark.implicits._
+    // a second, runtime install through the session's experimental
+    // methods would run both rules again in Spark's "User Provided
+    // Optimizers" batch for every later query, and list the strategy
+    // twice in the planner
+    val l = Seq((1L, 10L, "a"), (2L, 10L, "b")).toDF("k", "lt", "lid")
+    val r = Seq((1L, 5L, "r5")).toDF("rk", "rt", "tag")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(x => x.getString(0) -> (if (x.isNullAt(1)) null else x.getString(1))).toMap
+    val want = Map("a" -> "r5", "b" -> null)
+    assert(pairs(AsOfJoinOps.asof(l, r, Seq(l("k")), Seq(r("rk")), l("lt"), r("rt"))
+      .select("lid", "tag")) === want)
+    l.createOrReplaceTempView("once_l")
+    r.createOrReplaceTempView("once_r")
+    assert(pairs(spark.sql(
+      "SELECT lid, tag FROM asof_join('once_l', 'once_r', 'k:rk', 'lt', 'rt')")) === want)
+    val runtime = spark.sessionState.experimentalMethods
+    assert(runtime.extraStrategies.isEmpty, runtime.extraStrategies)
+    assert(runtime.extraOptimizations.isEmpty, runtime.extraOptimizations)
+    assert(spark.sessionState.planner.strategies.count(_ eq AsOfJoinStrategy) === 1)
   }
 
   test("both execs expose SQL metrics: output rows, matched rows") {
